@@ -14,4 +14,3 @@ Reference parity notes cite /root/reference file:line in docstrings.
 __version__ = "0.1.0"
 
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: F401
-from lakehouse_architecture_transaction_spark.catalog import load_tables, register_views  # noqa: F401

@@ -98,16 +98,6 @@ def load_table(
     return _spread(df, spark) if spread else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view for the SQL API."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def register_metastore(
     spark: SparkSession,
     sf_dir: str,

@@ -28,11 +28,6 @@ def h32_col(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def h32_sql(expr: str) -> str:
-    """Same hash in DuckDB SQL, for oracle queries."""
-    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
-
-
 def perm_coeffs(n: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for n universal-hash
     permutations h_i(x) = (a_i * x + b_i) mod P. Fixed small-integer

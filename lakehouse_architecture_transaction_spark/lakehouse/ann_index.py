@@ -29,7 +29,7 @@ lifecycle:
 - the IVF corpus table stores the vectors WITH their cell assignment
   (FAISS-style: the index contains the clustered vectors), so a
   loaded search is zero-join — and file-level data skipping on
-  ``__cell`` (lakehouse/table.py register_scan) means probing nprobe
+  ``__cell`` (lakehouse/table.py pruned_read) means probing nprobe
   cells reads only those files at scale.
 
 Search results from a loaded index are bit-identical to a

@@ -3,46 +3,56 @@
 Parity with the reference's storage layer (reference
 scripts/glue/script.py:201-227): first write creates the table
 partitioned by a chosen column; subsequent batches MERGE on the
-primary key (whenMatchedUpdateAll + whenNotMatchedInsertAll).
+primary key (whenMatchedUpdateAll + whenNotMatchedInsertAll). The
+merge itself is the join-based operator in operators/merge.py.
 
-delta-spark isn't in this image, so the default backend is parquet
-with an atomic directory-swap rewrite; when the ``delta`` package is
-importable the same API routes to a real DeltaTable merge (transaction
-log, file-level pruning). The merge itself is the join-based operator
-in operators/merge.py — identical logical plan either way.
+Layout — Delta's protocol in miniature, immutable data plus a log
+whose entries are created exclusively:
 
-``versioned=True`` switches to copy-on-write snapshots: every commit
-writes a fresh ``_versions/v%08d`` directory and atomically advances
-the ``_LATEST`` pointer — giving Delta's two user-visible transaction
-behaviors (time travel via ``read(version=)``, and readers never
-seeing a half-written table because old snapshot files are immutable)
-without the Delta log format. ``vacuum()`` is the retention knob.
+- ``_snapshots/<version>-<id>/``: one immutable parquet directory per
+  commit (partition subdirectories inside);
+- ``_txn_log/<version>.json``: the commit of ``version`` — its
+  snapshot directory, operation, ``n_rows``, timestamp and schema.
+
+Every write (create, append, overwrite, upsert, compact, restore) is
+one ``_commit``: write a fresh snapshot directory, then claim version
+``parent + 1`` by hard-linking a fully written temp entry to its log
+name. The link fails when that name exists, so exactly one writer
+wins each version and the loser raises :class:`CommitConflict`;
+``parent`` is the version the commit's input was read from, so a
+lost update cannot happen. A crash before the link leaves the log —
+and every reader — on the last committed version. An append's
+snapshot holds the batch's files plus hard links to the parent's, so
+an append writes only the batch.
+
+``versioned`` sets retention only. ``True`` keeps every snapshot
+until ``vacuum()``; ``False`` vacuums after each commit down to the
+current and previous snapshot (a reader that resolved the previous
+version can still finish). Log entries are never removed, so a
+vacuumed version number can never be claimed again.
 
 Scale notes: a full-outer-join merge rewrites the table — that is
 what Delta does logically too (copy-on-write); Delta wins at scale by
-pruning untouched FILES via the log. The partition layout here gives
-the same effect per-partition: merges whose source only touches some
-partitions can restrict the rewrite with ``partition_filter``.
+pruning untouched FILES via the log, which a merge here does not do.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
-import tempfile
+import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_architecture_transaction_spark.operators.merge import merge_upsert
 
-try:  # pragma: no cover - delta not present in the test image
-    from delta.tables import DeltaTable  # type: ignore
 
-    _HAVE_DELTA = True
-except ImportError:
-    _HAVE_DELTA = False
+class CommitConflict(RuntimeError):
+    """Another writer already committed the version this commit
+    claimed; nothing of this commit is visible."""
 
 
 def _parquet_footer_rows(target: str) -> int:
@@ -57,6 +67,18 @@ def _parquet_footer_rows(target: str) -> int:
             if f.endswith(".parquet"):
                 total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
     return total
+
+
+def _link_files(src: str, dst: str) -> None:
+    """Hard-link every data file of snapshot ``src`` into ``dst`` at
+    the same relative path: the new snapshot shares the old one's
+    immutable files without copying a byte."""
+    for root, _dirs, files in os.walk(src):
+        out = os.path.join(dst, os.path.relpath(root, src))
+        os.makedirs(out, exist_ok=True)
+        for f in files:
+            if not f.startswith((".", "_")):
+                os.link(os.path.join(root, f), os.path.join(out, f))
 
 
 class LakeTable:
@@ -89,90 +111,122 @@ class LakeTable:
             if bad:
                 raise ValueError(f"CHECK constraint {name!r} violated: NOT ({predicate})")
 
-    # -- versioning ----------------------------------------------------
+    # -- log -----------------------------------------------------------
 
-    def _pointer_path(self) -> str:
-        return os.path.join(self.path, "_LATEST")
+    def _log_path(self, version: int) -> str:
+        return os.path.join(self.path, "_txn_log", f"{version:08d}.json")
 
-    def _version_dir(self, version: int) -> str:
-        return os.path.join(self.path, "_versions", f"v{version:08d}")
+    def _entry(self, version: int) -> dict:
+        try:
+            with open(self._log_path(version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise FileNotFoundError(f"version {version} not found at {self.path}") from None
+
+    def _snapshot(self, version: int | None) -> tuple[str, dict]:
+        """(directory, log entry) of ``version`` (default: latest)."""
+        v = self.latest_version() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        entry = self._entry(v)
+        target = os.path.join(self.path, "_snapshots", entry["data"])
+        if not os.path.isdir(target):
+            raise FileNotFoundError(f"version {v} at {self.path} was vacuumed")
+        return target, entry
 
     def latest_version(self) -> int | None:
         try:
-            with open(self._pointer_path()) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
+            names = os.listdir(os.path.join(self.path, "_txn_log"))
+        except FileNotFoundError:
             return None
+        return max((int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()), default=None)
 
     def history(self) -> list[int]:
-        """Committed snapshot versions, oldest first (vacuumed ones
-        excluded)."""
-        vdir = os.path.join(self.path, "_versions")
-        if not os.path.isdir(vdir):
+        """Versions whose snapshot is still retained, oldest first."""
+        try:
+            names = os.listdir(os.path.join(self.path, "_snapshots"))
+        except FileNotFoundError:
             return []
-        latest = self.latest_version()
         out = []
-        for d in sorted(os.listdir(vdir)):
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) <= (latest if latest is not None else -1):
-                out.append(int(d[1:]))
-        return out
-
-    def _commit(self, df: DataFrame, operation: str = "write") -> int:
-        """Write the next snapshot and atomically advance the pointer.
-        The write happens BEFORE the pointer moves, so a crashed commit
-        leaves an orphan directory, never a visible broken table; the
-        log entry is appended AFTER the pointer advance, so the log
-        never describes a version that was never visible (a crash
-        between advance and append loses only the log line, and
-        ``describe_history`` tolerates that by keying on versions)."""
-        next_v = (self.latest_version() or 0) + 1 if self.latest_version() is not None else 0
-        self._write(df, self._version_dir(next_v))
-        n_rows = _parquet_footer_rows(self._version_dir(next_v))
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(next_v))
-        os.replace(tmp, self._pointer_path())
-        with open(os.path.join(self.path, "_commits.jsonl"), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "version": next_v,
-                        "operation": operation,
-                        "n_rows": n_rows,
-                        "timestamp": datetime.now(timezone.utc).isoformat(),
-                    }
-                )
-                + "\n"
-            )
-        return next_v
+        for name in names:
+            v = name.split("-")[0]
+            # a directory no entry names is a commit in flight or one
+            # that failed before its claim
+            with contextlib.suppress(FileNotFoundError):
+                if v.isdigit() and self._entry(int(v))["data"] == name:
+                    out.append(int(v))
+        return sorted(out)
 
     def describe_history(self) -> list[dict]:
-        """Commit log, newest first (Delta DESCRIBE HISTORY shape),
-        restricted to commits whose snapshot is still visible."""
-        log_path = os.path.join(self.path, "_commits.jsonl")
-        if not os.path.exists(log_path):
-            return []
+        """Commit log, newest first (Delta DESCRIBE HISTORY shape); the
+        entries of vacuumed versions stay listed."""
         latest = self.latest_version()
-        with open(log_path) as f:
-            entries = [json.loads(line) for line in f if line.strip()]
-        # key by version, last entry wins: a retried commit may append
-        # the same version twice
-        by_version: dict[int, dict] = {}
-        for e in entries:
-            if latest is not None and e["version"] <= latest:
-                by_version[e["version"]] = e
-        return [by_version[v] for v in sorted(by_version, reverse=True)]
+        return [] if latest is None else [self._entry(v) for v in range(latest, -1, -1)]
+
+    def _commit(
+        self, df: DataFrame | None, operation: str, parent: int | None, base: dict | None = None
+    ) -> int:
+        """The one write path: write ``df`` (if any) into a fresh
+        snapshot directory, hard-link the files of the ``base`` entry's
+        snapshot beside it, then claim version ``parent + 1`` (0 when
+        ``parent`` is None). Any failure removes the snapshot and
+        leaves the log at the last committed version."""
+        version = 0 if parent is None else parent + 1
+        name = f"{version:08d}-{uuid.uuid4().hex[:12]}"
+        target = os.path.join(self.path, "_snapshots", name)
+        try:
+            n_rows = 0
+            if df is not None:
+                self._write(df, target)
+                n_rows = _parquet_footer_rows(target)
+            if base is not None:
+                _link_files(os.path.join(self.path, "_snapshots", base["data"]), target)
+                n_rows += base["n_rows"]
+            self._claim(
+                {
+                    "version": version,
+                    "data": name,
+                    "operation": operation,
+                    "n_rows": n_rows,
+                    "timestamp": datetime.now(timezone.utc).isoformat(),
+                    "schema": base["schema"] if base is not None else df.schema.jsonValue(),
+                }
+            )
+        except BaseException:
+            shutil.rmtree(target, ignore_errors=True)
+            raise
+        if not self.versioned:
+            self.vacuum(keep_last=2)
+        return version
+
+    def _claim(self, entry: dict) -> None:
+        """Create the log entry exclusively: write it whole under a temp
+        name, then hard-link it to its final name. ``os.link`` fails if
+        the name exists, so readers never see a partial entry and only
+        one writer gets each version."""
+        final = self._log_path(entry["version"])
+        os.makedirs(os.path.dirname(final), exist_ok=True)
+        tmp = os.path.join(os.path.dirname(final), f".{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "w") as f:
+                json.dump(entry, f)
+            os.link(tmp, final)
+        except FileExistsError:
+            raise CommitConflict(
+                f"version {entry['version']} of {self.path} was committed by another writer"
+            ) from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
 
     def restore(self, version: int) -> int:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF``: roll the table
         back to an earlier snapshot AS A NEW COMMIT — history moves
-        forward (the bad versions stay queryable for forensics), only
-        the current pointer changes. Returns the new version number."""
-        if not self.versioned:
-            raise ValueError("restore requires versioned=True")
-        if not os.path.isdir(self._version_dir(version)):
-            raise FileNotFoundError(f"version {version} not found at {self.path}")
-        return self._commit(self.read(version), operation=f"restore(v{version})")
+        forward (the bad versions stay queryable for forensics). The
+        new snapshot hard-links the old one's files; no data is
+        rewritten. Returns the new version number."""
+        _target, entry = self._snapshot(version)
+        return self._commit(None, f"restore(v{version})", self.latest_version(), base=entry)
 
     def clone(self, target_path: str) -> "LakeTable":
         """Delta ``CLONE`` (deep): a new independent table initialized
@@ -191,175 +245,78 @@ class LakeTable:
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop all but the last ``keep_last`` snapshots (Delta's
-        VACUUM retention, directory-granular). Returns removed
-        versions."""
-        hist = self.history()
-        to_drop = hist[:-keep_last] if keep_last > 0 else hist[:-1]
+        VACUUM retention, directory-granular; at least the latest is
+        always kept). Returns removed versions."""
+        to_drop = self.history()[: -max(keep_last, 1)]
         for v in to_drop:
-            shutil.rmtree(self._version_dir(v), ignore_errors=True)
+            shutil.rmtree(os.path.join(self.path, "_snapshots", self._entry(v)["data"]), ignore_errors=True)
         return to_drop
 
     # -- state ---------------------------------------------------------
 
     def exists(self) -> bool:
-        if self.versioned:
-            return self.latest_version() is not None
-        return os.path.isdir(self.path) and bool(os.listdir(self.path))
+        return self.latest_version() is not None
 
     def read(self, version: int | None = None) -> DataFrame:
-        if self.versioned:
-            v = self.latest_version() if version is None else version
-            if v is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-            return self._read_parquet(self._version_dir(v))
-        if version is not None:
-            raise ValueError("time travel requires versioned=True")
-        if _HAVE_DELTA:
-            return self.spark.read.format("delta").load(self.path)
-        return self._read_parquet(self.path)
+        """The snapshot of ``version`` (default: latest). The schema
+        comes from the log entry, which makes an EMPTY PARTITIONED
+        snapshot readable (the partitioned writer emits no data files
+        for an empty frame, so there is no footer to infer from) and
+        skips footer-sampling schema inference at scale."""
+        from pyspark.sql.types import StructType
 
-    def _read_parquet(self, target: str) -> DataFrame:
-        """Read a snapshot directory; prefer the schema sidecar.
-
-        The sidecar (written by ``_write``) makes two things work that
-        bare inference cannot: an EMPTY PARTITIONED snapshot (the
-        partitioned writer emits no data files for an empty frame, so
-        there is no footer to infer from — r9 degenerate-sweep
-        finding), and at scale it skips the footer-sampling schema
-        inference entirely. Snapshots written before the sidecar
-        existed fall back to inference unchanged."""
-        sidecar = os.path.join(target, "_schema.json")
-        if os.path.exists(sidecar):
-            from pyspark.sql.types import StructType
-
-            with open(sidecar) as f:
-                schema = StructType.fromJson(json.load(f))
-            return self.spark.read.schema(schema).parquet(target)
-        return self.spark.read.parquet(target)
+        target, entry = self._snapshot(version)
+        return self.spark.read.schema(StructType.fromJson(entry["schema"])).parquet(target)
 
     # -- writes --------------------------------------------------------
 
     def _write(self, df: DataFrame, target: str) -> None:
-        writer = df.write.mode("overwrite")
+        writer = df.write
         if self.partition_by and self.partition_by in df.columns:
             writer = writer.partitionBy(self.partition_by)
-        if _HAVE_DELTA:
-            writer.format("delta").save(target)
-        else:
-            writer.parquet(target)
-            # after the data write: overwrite mode has already cleared
-            # the directory, so the sidecar always describes THIS
-            # snapshot (partition column included — the explicit-schema
-            # read then types partition values identically to the
-            # written frame)
-            with open(os.path.join(target, "_schema.json"), "w") as f:
-                f.write(df.schema.json())
+        writer.parquet(target)
 
-    def create(self, df: DataFrame) -> None:
-        """Initial load (reference scripts/glue/script.py:219-227)."""
+    def create(self, df: DataFrame) -> int:
+        """Initial load (reference scripts/glue/script.py:219-227): the
+        table's version 0. Raises CommitConflict if the table exists."""
         self._check_constraints(df)
-        if self.versioned:
-            self._commit(df, operation="create")
-            return
-        self._write(df, self.path)
+        return self._commit(df, "create", parent=None)
 
     def overwrite(self, df: DataFrame, operation: str = "overwrite") -> int:
         """Full-replace commit: the whole table becomes ``df`` as a
-        NEW snapshot (versioned tables keep history — ``diff()``
-        between overwrite commits yields the replacement delta). The
-        refresh primitive for derived tables (e.g. the persisted ANN
-        index, lakehouse/ann_index.py) where merge-on-key semantics
-        would never delete rows that fell out of the new build.
-
-        Safe for read-then-overwrite: on a non-versioned table,
-        ``df`` may lazily derive from reading this very table, so the
-        replacement is staged to a sibling temp dir and atomically
-        swapped in (same discipline as the non-versioned upsert) —
-        never an in-place truncating write that would corrupt the
-        plan's own source mid-read."""
+        NEW snapshot (``diff()`` between overwrite commits yields the
+        replacement delta). The refresh primitive for derived tables
+        (e.g. the persisted ANN index, lakehouse/ann_index.py) where
+        merge-on-key semantics would never delete rows that fell out
+        of the new build. ``df`` may lazily derive from reading this
+        very table: the snapshot it reads is immutable."""
         self._check_constraints(df)
-        if self.versioned:
-            return self._commit(df, operation=operation)
-        if not self.exists():
-            self._write(df, self.path)
-            return 0
-        parent = os.path.dirname(os.path.abspath(self.path))
-        tmp = tempfile.mkdtemp(prefix=".overwrite-", dir=parent)
-        staging = os.path.join(tmp, "data")
-        self._write(df, staging)
-        old = os.path.join(tmp, "old")
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return 0
+        return self._commit(df, operation, parent=self.latest_version())
 
-    def upsert(self, source: DataFrame, evolve_schema: bool = False) -> None:
+    def upsert(self, source: DataFrame, evolve_schema: bool = False) -> int:
         """MERGE ``source`` on the key columns; creates on first call
         (reference scripts/glue/script.py:202-216 try-merge-except-create).
         ``evolve_schema`` forwards Delta mergeSchema semantics: new
         source columns join the table schema, and columns the source
         lacks keep their values (operators/merge.py).
         """
-        if not self.exists():
-            self.create(source)
-            return
+        parent = self.latest_version()
+        if parent is None:
+            return self.create(source)
         self._check_constraints(source)
-        if self.versioned:
-            # Copy-on-write: read the current snapshot, merge, commit a
-            # new immutable snapshot — no swap needed, old versions
-            # remain readable (time travel).
-            self._commit(
-                merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema),
-                operation="merge",
-            )
-            return
-        if _HAVE_DELTA:  # pragma: no cover - delta not in test image
-            dt = DeltaTable.forPath(self.spark, self.path)
-            cond = " AND ".join(f"existing.{k} = updates.{k}" for k in self.keys)
-            (
-                dt.alias("existing")
-                .merge(source.alias("updates"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
-        merged = merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema)
-        # Materialize next to the table, then atomically swap: the
-        # source plan reads the files being replaced, so an in-place
-        # overwrite would corrupt mid-read.
-        parent = os.path.dirname(os.path.abspath(self.path))
-        tmp = tempfile.mkdtemp(prefix=".merge-", dir=parent)
-        staging = os.path.join(tmp, "data")
-        self._write(merged, staging)
-        old = os.path.join(tmp, "old")
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
+        merged = merge_upsert(self.read(parent), source, keys=self.keys, evolve_schema=evolve_schema)
+        return self._commit(merged, "merge", parent=parent)
 
     def compact(self, target_files: int = 8) -> int:
         """Small-file compaction (Delta OPTIMIZE / bin-packing): the
         rejected-zone's blind appends and streaming micro-batches each
         add files, and at scale the file count — not the byte count —
         becomes the scan bottleneck (driver listing, task scheduling,
-        footer reads). Rewrites the current contents into
-        ``target_files`` coalesced files; with ``versioned=True`` the
-        rewrite is a new snapshot (old files untouched), else an
-        atomic directory swap. Returns the new file count."""
-        df = self.read().coalesce(target_files)
-        if self.versioned:
-            self._commit(df, operation="compact")
-            target = self._version_dir(self.latest_version())
-        else:
-            parent = os.path.dirname(os.path.abspath(self.path))
-            tmp = tempfile.mkdtemp(prefix=".compact-", dir=parent)
-            staging = os.path.join(tmp, "data")
-            self._write(df, staging)
-            old = os.path.join(tmp, "old")
-            os.rename(self.path, old)
-            os.rename(staging, self.path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            target = self.path
+        footer reads). Commits the current contents rewritten into
+        ``target_files`` coalesced files. Returns the new file count."""
+        parent = self.latest_version()
+        v = self._commit(self.read(parent).coalesce(target_files), "compact", parent=parent)
+        target, _entry = self._snapshot(v)
         return sum(
             1 for root, _dirs, files in os.walk(target) for f in files if f.endswith(".parquet")
         )
@@ -376,8 +333,6 @@ class LakeTable:
         equality, so wide tables don't multiply join conditions.
         Columns are aligned by name (schema evolution adds columns as
         NULL on the older side)."""
-        if not self.versioned:
-            raise ValueError("diff requires versioned=True")
         from pyspark.sql import functions as F
 
         old = self.read(from_version)
@@ -414,56 +369,23 @@ class LakeTable:
         manifest-pruning behavior, served from parquet footer stats
         (see :func:`pruned_read`). Pair with a ``zorder_write``-style
         clustered layout for tight per-file ranges."""
-        if self.versioned:
-            v = self.latest_version() if version is None else version
-            if v is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-            target = self._version_dir(v)
-        else:
-            if version is not None:
-                raise ValueError("time travel requires versioned=True")
-            target = self.path
+        target, _entry = self._snapshot(version)
         return pruned_read(self.spark, target, where)
 
-    def register_scan(
-        self, name: str, where: list[Predicate], version: int | None = None
-    ) -> dict:
-        """Register a footer-pruned scan as a temp view so SQL-BY-NAME
-        queries get file-level data skipping too — the metastore leg of
-        the Delta/Iceberg contract (the reference's Athena queries hit
-        a Glue-crawled table whose manifest prunes partitions;
-        reference code/step_function_code.json "StartCrawler" →
-        Athena). The view's relation is built from the kept file list,
-        so every ``spark.sql(f"SELECT ... FROM {name}")`` plan scans
-        only surviving files; the residual predicates are applied in
-        the view, keeping correctness pruning-independent. Returns the
-        skipping report (files_total/read/skipped)."""
-        df, report = self.scan(where, version=version)
-        df.createOrReplaceTempView(name)
-        return report
-
-    def append(self, df: DataFrame) -> None:
+    def append(self, df: DataFrame) -> int:
         """Blind append (the reference's rejected-records zone uses
-        this mode — scripts/glue/script.py:190-192).
-
-        On a ``versioned=True`` table the append is itself a commit
-        (read latest snapshot, union, new immutable snapshot):
-        writing files straight into the table root would be invisible
-        to versioned ``read()`` and would litter the snapshot area."""
+        this mode — scripts/glue/script.py:190-192): a commit whose
+        snapshot is the batch's files plus hard links to the parent
+        snapshot's files, so only the batch is written."""
         self._check_constraints(df)
-        if self.versioned:
-            if not self.exists():
-                self._commit(df, operation="append")
-            else:
-                self._commit(self.read().unionByName(df), operation="append")
-            return
-        writer = df.write.mode("append")
-        if self.partition_by and self.partition_by in df.columns:
-            writer = writer.partitionBy(self.partition_by)
-        if _HAVE_DELTA:
-            writer.format("delta").save(self.path)
-        else:
-            writer.parquet(self.path)
+        parent = self.latest_version()
+        if parent is None:
+            return self._commit(df, "append", parent=None)
+        _target, base = self._snapshot(parent)
+        have = {f["name"] for f in base["schema"]["fields"]}
+        if set(df.columns) != have:
+            raise ValueError(f"append columns {sorted(df.columns)} differ from the table's {sorted(have)}")
+        return self._commit(df, "append", parent=parent, base=base)
 
 
 def _interleave_bits(scaled, bits: int):

@@ -17,8 +17,6 @@ from lakehouse_architecture_transaction_spark.operators.skew import salted_join 
 from lakehouse_architecture_transaction_spark.operators.similarity import (  # noqa: F401
     cosine_dup_pairs,
     cosine_topk,
-    label_centroids,
-    sign_lsh_ann,
 )
 from lakehouse_architecture_transaction_spark.operators.text import (  # noqa: F401
     lang_id,

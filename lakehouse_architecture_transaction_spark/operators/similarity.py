@@ -107,39 +107,6 @@ def sign_bucket_expr(vec_col: str, bits: int) -> Column:
     )
 
 
-def sign_lsh_ann(
-    emb: DataFrame, id_col: str, vec_col: str, query_ids: list[int], k: int = 5, bits: int = 4
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-LSH
-    bucket, then exact cosine within the bucket. Same output shape as
-    cosine_topk; recall trades against 2^bits bucket fan-out.
-    """
-    bucketed = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_bucket_expr(vec_col, bits).alias("__bkt"),
-        norm2_expr(vec_col).alias("__n2"),
-    )
-    q = bucketed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col("__bkt"),
-        F.col("__n2").alias("__qn2"),
-    )
-    pairs = bucketed.join(F.broadcast(q), on="__bkt", how="inner").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        (
-            dot_expr("__qv", vec_col)
-            / (F.sqrt(F.col("__qn2")) * F.sqrt(F.col("__n2")))
-        ).alias("cosine"),
-    )
-    return _cosine_topk_tail(scored, k)
-
-
 def _flip_expr(bucket_col: str, i: str) -> str:
     """SQL fragment: ``bucket_col`` with bit position ``i`` (1-based
     expression) inverted."""
@@ -865,21 +832,6 @@ def kmeans_lloyd(
         _assign(emb, id_col, vec_col, cent)
         .select(F.col(id_col), F.col("cluster"))
         .orderBy(id_col)
-    )
-
-
-def label_centroids(emb: DataFrame, label_col: str, vec_col: str) -> DataFrame:
-    """Per-label centroid, emitted flat as (label, pos, centroid).
-
-    posexplode → groupBy(label, pos) keeps the shuffle narrow and the
-    result engine-comparable (no nested-array hashing). Mean computed
-    as exact decimal sum / count in one double division (the sum is
-    order-independent in decimal, so no fold is needed here).
-    """
-    exploded = emb.select(F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "v"))
-    return (
-        exploded.groupBy(label_col, "pos")
-        .agg(mean_v_exact().alias("centroid"))
     )
 
 

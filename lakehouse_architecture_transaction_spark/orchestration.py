@@ -260,26 +260,3 @@ def process_landing(
         )
     return results
 
-
-def watch(
-    spark: SparkSession,
-    landing_root: str,
-    archive_root: str,
-    error_root: str,
-    lake_root: str,
-    cycles: int = 1,
-    poll_seconds: float = 0.0,
-) -> list[TriggerResult]:
-    """Poll the landing zone for ``cycles`` rounds (the S3-event loop,
-    minus the cloud: moved files never reprocess because the landing
-    zone is drained each cycle)."""
-    import time
-
-    all_results: list[TriggerResult] = []
-    for i in range(cycles):
-        all_results.extend(
-            process_landing(spark, landing_root, archive_root, error_root, lake_root)
-        )
-        if poll_seconds and i + 1 < cycles:
-            time.sleep(poll_seconds)
-    return all_results

@@ -73,12 +73,12 @@ def pruned_scan_report(spark: SparkSession, sf_dir: str) -> dict:
     """Register the pruned scan view and return the skipping report —
     split out so tests can assert files_read < files_total on the SAME
     path the registered query takes."""
-    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+    from lakehouse_architecture_transaction_spark.lakehouse.table import pruned_read
 
-    path = clustered_orders_path(spark, sf_dir)
-    t = LakeTable(spark, path, keys=["o_orderkey"])
     where = [("o_orderdate", ">=", _SCAN_FROM), ("o_orderdate", "<", _SCAN_TO)]
-    return t.register_scan("orders_pruned_scan", where)
+    df, report = pruned_read(spark, clustered_orders_path(spark, sf_dir), where)
+    df.createOrReplaceTempView("orders_pruned_scan")
+    return report
 
 
 @register(
@@ -96,7 +96,7 @@ def pruned_scan_report(spark: SparkSession, sf_dir: str) -> dict:
 )
 def orders_pruned_scan_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority mix of H1-1996 orders, answered BY NAME over the
-    footer-pruned scan view (lakehouse/table.py register_scan): the
+    footer-pruned scan view (lakehouse/table.py pruned_read): the
     crawler→catalog→SQL read path of the reference, with file-level
     data skipping on the date predicate (6 months of a multi-year
     range-clustered table — most files never open). The oracle runs
@@ -266,12 +266,12 @@ def zorder_scan_report(spark: SparkSession, sf_dir: str) -> dict:
     """Register the Z-order pruned scan view and return the skipping
     report — split out (same pattern as pruned_scan_report) so tests
     assert files_read < files_total on the registered query's path."""
-    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+    from lakehouse_architecture_transaction_spark.lakehouse.table import pruned_read
 
-    path = zordered_lineitem_path(spark, sf_dir)
-    t = LakeTable(spark, path, keys=["l_orderkey", "l_linenumber"])
     where = [("l_partkey", "<", _Z_PARTKEY_LT), ("l_suppkey", "<", _Z_SUPPKEY_LT)]
-    return t.register_scan("lineitem_zorder_scan", where)
+    df, report = pruned_read(spark, zordered_lineitem_path(spark, sf_dir), where)
+    df.createOrReplaceTempView("lineitem_zorder_scan")
+    return report
 
 
 @register(
@@ -291,7 +291,7 @@ def zorder_scan_report(spark: SparkSession, sf_dir: str) -> dict:
 def lineitem_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return-flag mix of the (part < {pk}, supplier < {sk}) slice,
     answered BY NAME over the Z-ORDER-clustered footer-pruned scan
-    view (lakehouse/table.py zorder_write + register_scan — E17, until
+    view (lakehouse/table.py zorder_write + pruned_read — E17, until
     round 6 pinned only by a per-file span test): multi-column file
     skipping on the actual SQL path. Correctness is layout-independent
     by construction (pruned_read re-applies the predicates), which is

@@ -117,6 +117,17 @@ def test_tail_line_pins_previous_round_entries_first(tmp_path):
     assert "ghost_query" not in parsed["queries"]
 
 
+def test_tail_line_long_pinned_name_does_not_drop_shorter_ones():
+    # one pinned entry that cannot fit must not end the packing: the
+    # shorter pinned names after it still go into the line
+    long_name = "x" * 300
+    times = {long_name: 9.0, "qa": 2.0, "qb": 1.0}
+    budget = len(tail_line(_base(times), budget=10_000, pin=[])) - len(long_name)
+    parsed = json.loads(tail_line(_base(times), budget=budget, pin=[long_name, "qa", "qb"]))
+    assert parsed["queries"] == {"qa": 2.0, "qb": 1.0}
+    assert parsed["queries_omitted"] == 1
+
+
 def test_prev_round_tail_names_reads_highest_round(tmp_path):
     from bench import prev_round_tail_names
 

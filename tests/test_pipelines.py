@@ -43,7 +43,11 @@ def test_reference_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert by_name["order_items"].rejected_rows > 0
 
     # The rejected zone carries the reference's metadata columns.
-    rejected = spark.read.parquet(str(tmp_path / "lake" / "rejected" / "order_items"))
+    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+
+    rejected = LakeTable(
+        spark, str(tmp_path / "lake" / "rejected" / "order_items"), keys=["l_orderkey", "l_linenumber"]
+    ).read()
     assert {"validation_errors", "rejection_time", "source"} <= set(rejected.columns)
     errs = {r["validation_errors"] for r in rejected.select("validation_errors").distinct().collect()}
     assert "Invalid order reference" in errs

@@ -269,7 +269,7 @@ def text_main(spark) -> None:
     table = "\n".join(lines)
     print(table)
     if "--update-md" in sys.argv:
-        _update_text_md(table)
+        _update_md(table, TBEGIN, TEND)
         print("SCALE.md updated (text block)")
 
 
@@ -330,7 +330,7 @@ def main() -> None:
     table = "\n".join(lines)
     print(table)
     if "--update-md" in sys.argv:
-        _update_md(table)
+        _update_md(table, BEGIN, END)
         print("SCALE.md updated")
 
 
@@ -340,46 +340,18 @@ TBEGIN = "<!-- SKEW-PROBE-TEXT:BEGIN -->"
 TEND = "<!-- SKEW-PROBE-TEXT:END -->"
 
 
-def _update_text_md(table: str) -> None:
+def _update_md(table: str, begin: str, end: str) -> None:
+    """Replace the table between ``begin`` and ``end`` in SCALE.md. The
+    prose that explains each table sits above its markers and is never
+    rewritten."""
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    block = (
-        f"{TBEGIN}\nHot CONTENT keys (r16, ADVICE r15): runs of 3 consecutive\n"
-        f"tokens (positions i%8<3) in EVERY document replaced by one constant\n"
-        f"token, so the hottest bigram carries ~2/8 of all bigram occurrences\n"
-        f"and the hottest 3-shingle ~1/8 of all shingles at unchanged token\n"
-        f"volume. These operators compute their per-key statistic as a WINDOW\n"
-        f"over the content key (the r15 restructures), which AQE cannot\n"
-        f"skew-split — the max-task column is the hot key's one-task bound:\n"
-        f"it must grow proportionately to the head's share (O(hot\n"
-        f"occurrences) work in one task), not explode quadratically.\n\n{table}\n{TEND}"
-    )
-    txt = open(path).read()
-    if TBEGIN in txt and TEND in txt:
-        pre, post = txt.split(TBEGIN)[0], txt.split(TEND)[1]
-        open(path, "w").write(pre + block + post)
-    else:
-        open(path, "a").write("\n## Skew probe — hot content keys (window statistics)\n\n" + block + "\n")
-
-
-def _update_md(table: str) -> None:
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    block = (
-        f"{BEGIN}\nSame volume (sf0.1, 32 files both sides), but ~1/3 of each\n"
-        f"fact's join/window key collapsed onto ONE hot key (events.user_id,\n"
-        f"orders.o_custkey, lineitem.l_partkey, documents.source); per-query\n"
-        f"min of 3 runs. ratio ≈ 1 ⇒ the plan's parallelism does not depend\n"
-        f"on the key distribution; > 2 flags a hot-key funnel. The max-task\n"
-        f"column is the per-task duration ceiling across that cell's runs\n"
-        f"(stage metrics API): wall-clock flatness can hide a straggler that\n"
-        f"32 idle slots absorb at sf0.1 but 1000 busy executors would not —\n"
-        f"a max-task ratio ≫ the wall ratio is the hidden-funnel signal.\n\n{table}\n{END}"
-    )
-    txt = open(path).read()
-    if BEGIN in txt and END in txt:
-        pre, post = txt.split(BEGIN)[0], txt.split(END)[1]
-        open(path, "w").write(pre + block + post)
-    else:
-        open(path, "a").write("\n## Skew probe (hot-key robustness)\n\n" + block + "\n")
+    with open(path) as f:
+        txt = f.read()
+    if begin not in txt or end not in txt:
+        raise SystemExit(f"SCALE.md lacks the {begin} … {end} markers")
+    pre, post = txt.split(begin)[0], txt.split(end)[1]
+    with open(path, "w") as f:
+        f.write(f"{pre}{begin}\n{table}\n{end}{post}")
 
 
 if __name__ == "__main__":
