@@ -26,13 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Small dimension tables that should be broadcast in joins at any scale
-#: (TPC-H ratios: region=5 rows, nation=25; supplier/part grow slowly).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -6,8 +6,8 @@ scripts/glue/script.py:204-227): ``whenMatchedUpdateAll`` +
 delta-spark isn't in this image, so the engine expresses the same
 semantics as a full-outer join that prefers the source row — exactly
 what Delta's merge produces for update-all/insert-all, minus the
-transaction log. ``lakehouse/table.py`` wires this into a persistent
-parquet table (and uses real Delta when importable).
+transaction log, which ``lakehouse/table.py`` adds when it wires this
+into a persistent versioned parquet table.
 
 Scale: one shuffle on the merge key for each side (or broadcast when
 the update batch is small — the common CDC case, which Catalyst/AQE

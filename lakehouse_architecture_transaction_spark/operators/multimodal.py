@@ -31,9 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Metadata carried alongside every payload.
-META_SCHEMA = "mime string, width int, height int"
-
 FEATURE_DIM = 16
 
 

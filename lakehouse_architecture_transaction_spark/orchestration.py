@@ -30,9 +30,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, not_null, positive
 from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
-from lakehouse_architecture_transaction_spark.pipelines import DatasetSpec, process_dataset
+from lakehouse_architecture_transaction_spark.pipelines import (
+    DatasetSpec,
+    dataset_spec,
+    process_dataset,
+)
 
 #: Processing order: order_items validates against curated dims, so
 #: dims must land first within a cycle (reference
@@ -88,48 +91,18 @@ def _dataset_of(filename: str) -> str | None:
 
 
 def _spec_for(spark: SparkSession, dataset: str, lake_root: str) -> DatasetSpec:
-    if dataset == "products":
-        return DatasetSpec(
-            name="products",
-            keys=["p_partkey"],
-            rules=[not_null("p_partkey"), not_null("p_name", "Null product_name")],
-        )
-    if dataset == "orders":
-        return DatasetSpec(
-            name="orders",
-            keys=["o_orderkey"],
-            rules=[
-                not_null("o_orderkey"),
-                not_null("o_orderdate", "Invalid timestamp"),
-                positive("o_totalprice"),
-            ],
-        )
-    if dataset == "order_items":
-        fk_checks = []
-        for dim, fk_col, ref_col, err in (
-            ("orders", "l_orderkey", "o_orderkey", "Invalid order reference"),
-            ("products", "l_partkey", "p_partkey", "Invalid product reference"),
-        ):
-            dim_table = LakeTable(spark, os.path.join(lake_root, "curated", dim), keys=[ref_col])
-            if not dim_table.exists():
-                raise RuntimeError(
-                    f"order_items requires curated {dim!r} before it can FK-validate "
-                    "(Step Function sequencing)"
-                )
-            fk_checks.append(
-                FkCheck(fk_col=fk_col, ref=dim_table.read(), ref_col=ref_col, error=err)
+    if dataset != "order_items":
+        return dataset_spec(dataset)
+    dims = {}
+    for dim, ref_col in (("orders", "o_orderkey"), ("products", "p_partkey")):
+        dim_table = LakeTable(spark, os.path.join(lake_root, "curated", dim), keys=[ref_col])
+        if not dim_table.exists():
+            raise RuntimeError(
+                f"order_items requires curated {dim!r} before it can FK-validate "
+                "(Step Function sequencing)"
             )
-        return DatasetSpec(
-            name="order_items",
-            keys=["l_orderkey", "l_linenumber"],
-            rules=[
-                not_null("l_orderkey"),
-                not_null("l_linenumber"),
-                not_null("l_shipdate", "Invalid timestamp"),
-            ],
-            fk_checks=fk_checks,
-        )
-    raise KeyError(dataset)
+        dims[dim] = dim_table.read()
+    return dataset_spec("order_items", **dims)
 
 
 def _retrying(fn, max_attempts: int, interval_s: float, backoff_rate: float, transient):

@@ -28,7 +28,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, Rule, validate
+from lakehouse_architecture_transaction_spark.functions.validation import (
+    FkCheck,
+    Rule,
+    not_null,
+    positive,
+    validate,
+)
 from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
 from lakehouse_architecture_transaction_spark.operators.dedup import dedup_exact
 
@@ -96,15 +102,62 @@ def process_dataset(
     )
 
 
+def dataset_spec(
+    name: str, products: DataFrame | None = None, orders: DataFrame | None = None
+) -> DatasetSpec:
+    """The reference's contract for one of its three datasets (keys,
+    rules and error strings of reference scripts/glue/script.py:100-132).
+    ``order_items`` FK-checks against the CURATED ``products`` and
+    ``orders`` frames the caller passes in."""
+    if name == "products":
+        return DatasetSpec(
+            name="products",
+            keys=["p_partkey"],
+            rules=[not_null("p_partkey"), not_null("p_name", "Null product_name")],
+        )
+    if name == "orders":
+        return DatasetSpec(
+            name="orders",
+            keys=["o_orderkey"],
+            rules=[
+                not_null("o_orderkey"),
+                not_null("o_orderdate", "Invalid timestamp"),
+                positive("o_totalprice"),
+            ],
+        )
+    if name == "order_items":
+        return DatasetSpec(
+            name="order_items",
+            keys=["l_orderkey", "l_linenumber"],
+            rules=[
+                not_null("l_orderkey"),
+                not_null("l_linenumber"),
+                not_null("l_shipdate", "Invalid timestamp"),
+            ],
+            fk_checks=[
+                FkCheck(
+                    fk_col="l_orderkey",
+                    ref=orders,
+                    ref_col="o_orderkey",
+                    error="Invalid order reference",
+                ),
+                FkCheck(
+                    fk_col="l_partkey",
+                    ref=products,
+                    ref_col="p_partkey",
+                    error="Invalid product reference",
+                ),
+            ],
+        )
+    raise KeyError(name)
+
+
 def run_reference_pipeline(
     spark: SparkSession,
     products: DataFrame,
     orders: DataFrame,
     order_items: DataFrame,
     lake_root: str,
-    product_key: str = "p_partkey",
-    order_key: str = "o_orderkey",
-    item_keys: tuple[str, str] = ("l_orderkey", "l_linenumber"),
 ) -> list[StageResult]:
     """The reference's three-dataset flow on arbitrary input frames.
 
@@ -114,52 +167,13 @@ def run_reference_pipeline(
     252-258). Dims are broadcast in the FK anti-joins; at fact-sized
     reference sets FkCheck(broadcast=False) shuffles instead.
     """
-    from lakehouse_architecture_transaction_spark.functions.validation import not_null, positive
-
-    results: list[StageResult] = []
-
-    prod_spec = DatasetSpec(
-        name="products",
-        keys=[product_key],
-        rules=[not_null(product_key), not_null("p_name", "Null product_name")],
+    r_products, curated_products = process_dataset(
+        spark, products, dataset_spec("products"), lake_root
     )
-    r, curated_products = process_dataset(spark, products, prod_spec, lake_root)
-    results.append(r)
-
-    order_spec = DatasetSpec(
-        name="orders",
-        keys=[order_key],
-        rules=[
-            not_null(order_key),
-            not_null("o_orderdate", "Invalid timestamp"),
-            positive("o_totalprice"),
-        ],
-    )
-    r, curated_orders = process_dataset(spark, orders, order_spec, lake_root)
-    results.append(r)
-
-    item_spec = DatasetSpec(
-        name="order_items",
-        keys=list(item_keys),
-        rules=[not_null(k) for k in item_keys] + [not_null("l_shipdate", "Invalid timestamp")],
-        fk_checks=[
-            FkCheck(
-                fk_col="l_orderkey",
-                ref=curated_orders,
-                ref_col=order_key,
-                error="Invalid order reference",
-            ),
-            FkCheck(
-                fk_col="l_partkey",
-                ref=curated_products,
-                ref_col=product_key,
-                error="Invalid product reference",
-            ),
-        ],
-    )
-    r, _ = process_dataset(spark, order_items, item_spec, lake_root)
-    results.append(r)
-    return results
+    r_orders, curated_orders = process_dataset(spark, orders, dataset_spec("orders"), lake_root)
+    item_spec = dataset_spec("order_items", products=curated_products, orders=curated_orders)
+    r_items, _ = process_dataset(spark, order_items, item_spec, lake_root)
+    return [r_products, r_orders, r_items]
 
 
 def summary_df(spark: SparkSession, results: list[StageResult]) -> DataFrame:

@@ -1,28 +1,24 @@
-"""Query plan library.
+"""Query plan library, one module per query family.
 
 Importing this package registers every query into
 ``lakehouse_architecture_transaction_spark.plans.registry.REGISTRY``; ``__spark_entry__``
-exposes the registry to the driver.
+exposes the registry to the driver. Helpers that more than one family
+uses live in ``_shared``.
 """
 
 from lakehouse_architecture_transaction_spark.plans import (  # noqa: F401
-    analytics,
-    analytics3,
-    analytics_tpch2,
+    ann,
     behavior,
-    customer_value,
+    dedup,
+    emb,
     etl,
-    lakehouse_queries,
-    pipeline_ops,
-    pipeline_ops2,
-    pipeline_ops3,
-    pipeline_ops4,
-    queued_r8,
-    queued_r9,
-    queued_r10,
-    queued_r11,
-    queued_r12,
-    queued_r13,
-    queued_r14,
+    events,
+    graph,
+    mm,
+    sampling,
+    streaming,
+    text,
+    tpch,
+    window,
 )
 from lakehouse_architecture_transaction_spark.plans.registry import REGISTRY, QuerySpec  # noqa: F401

@@ -3,7 +3,10 @@
 Each operator the engine claims is registered here as a
 ``QuerySpec``: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus
 (when SQL-expressible) an ANSI-SQL oracle string DuckDB can run on the
-same parquet tables. The driver's correctness gate and the local
+same parquet tables. The one way to register is the decorator
+``@register(oracle=..., headline=True)`` on a function in a family
+module: the function's name is the query name and the module's name
+is its family. The driver's correctness gate and the local
 pytest oracle harness both consume this registry, so the engine and
 its oracle can never drift apart silently.
 
@@ -30,16 +33,27 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
+    family: str
     oracle: str | None = None
-    doc: str = ""
+    headline: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(oracle: str | None = None, headline: bool = False):
+    """Register ``fn`` under its own name, in the family named by its
+    defining module (``plans/<family>.py``); ``headline`` puts it in
+    the bench's headline set."""
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[fn.__name__] = QuerySpec(
+            name=fn.__name__,
+            fn=fn,
+            family=fn.__module__.rsplit(".", 1)[-1],
+            oracle=oracle,
+            headline=headline,
+        )
         return fn
 
     return deco

@@ -13,7 +13,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import HEADLINE_FAMILIES, TAIL_BUDGET, tail_line
+from bench import HEADLINE, TAIL_BUDGET, tail_line
 
 
 def _base(times: dict) -> dict:
@@ -63,7 +63,7 @@ def _base(times: dict) -> dict:
 
 
 def test_tail_line_fits_and_parses_at_current_headline_size():
-    times = {name: 1.2345 for name in HEADLINE_FAMILIES}
+    times = {name: 1.2345 for name in HEADLINE}
     line = tail_line(_base(times))
     assert len(line) <= TAIL_BUDGET <= 1999
     parsed = json.loads(line)
@@ -200,7 +200,7 @@ def test_anchor_drift_flags_weather_regime_change():
 def test_tail_line_carries_anchor_drift_flag():
     # a weather-flagged capture must label itself IN the driver-visible
     # line, same as contention_suspect
-    times = {name: 1.2345 for name in HEADLINE_FAMILIES}
+    times = {name: 1.2345 for name in HEADLINE}
     parsed = json.loads(tail_line(_base(times)))
     assert parsed["anchor_drift_suspect"] is True
     assert parsed["anchor_drift_vs_committed"] == 1.327

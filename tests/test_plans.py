@@ -220,22 +220,18 @@ def test_r10_queued_materialize_shared_frames(spark, sf_dir):
     # materialization lesson): once the shared frame is localCheckpoint-ed,
     # the FINAL plan must contain ZERO parquet scans — every branch reads
     # the materialized frame, never re-running the upstream per branch.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
-
-    for fn in (Q.docs_split_leakage, Q.docs_source_distinctive_terms,
-               Q.orders_revenue_autocorr):
-        plan = _formatted_plan(fn(spark, sf_dir))
+    for name in ("docs_split_leakage", "docs_source_distinctive_terms",
+                 "orders_revenue_autocorr"):
+        plan = _formatted_plan(REGISTRY[name].fn(spark, sf_dir))
         n_scans = plan.count("ReadSchema")
-        assert n_scans == 0, f"{fn.__name__}: expected 0 parquet scans after materialization, saw {n_scans}"
+        assert n_scans == 0, f"{name}: expected 0 parquet scans after materialization, saw {n_scans}"
 
 
 def test_seasonal_decompose_single_scan_and_broadcast(spark, sf_dir):
     # events_seasonal_decompose materializes the windowed frame; the
     # final plan re-reads only that frame and broadcasts the ≤7-row
     # per-phase seasonal means.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
-
-    plan = _formatted_plan(Q.events_seasonal_decompose(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["events_seasonal_decompose"].fn(spark, sf_dir))
     assert plan.count("ReadSchema") == 0
     assert "BroadcastHashJoin" in plan, "phase means must broadcast"
 
@@ -247,8 +243,6 @@ def test_inclusion_profile_one_scan_per_table_pruned(spark, sf_dir):
     # to exactly the key columns its edges need. A scan count above 7
     # means an edge side grew its own pipeline again; an over-wide
     # ReadSchema means the explode stopped pruning.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
-
     expected_cols = {
         ("o_custkey", "o_orderkey"),  # orders: child e0, parent e1/e7
         ("l_orderkey", "l_partkey", "l_suppkey"),  # lineitem: 3 children
@@ -258,7 +252,7 @@ def test_inclusion_profile_one_scan_per_table_pruned(spark, sf_dir):
         ("n_nationkey",),  # nation: parent of e4+e5
         ("user_id",),  # events
     }
-    plan = _formatted_plan(Q.catalog_inclusion_profile(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["catalog_inclusion_profile"].fn(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert len(schemas) == 7, f"expected 7 single-pass table scans, saw {len(schemas)}"
     got = {tuple(sorted(c.split(":")[0] for c in s.split(","))) for s in schemas}
@@ -275,9 +269,7 @@ def test_vocab_growth_two_scans_and_broadcast_cuts(spark, sf_dir):
     # size() pass + the explode→min-first-occurrence aggregate); the
     # 8-row checkpoint frame joins via broadcast (nested-loop on the
     # <= range predicate is fine — the broadcast side is 8 rows).
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
-
-    plan = _formatted_plan(Q.docs_vocab_growth(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["docs_vocab_growth"].fn(spark, sf_dir))
     assert plan.count("ReadSchema") == 2
     assert "BroadcastNestedLoopJoin" in plan
 
@@ -311,11 +303,11 @@ def test_survival_curve_broadcasts_month_histogram_not_customers(spark, sf_dir):
     # BroadcastExchange), never the per-customer span frame — the
     # first cut of this plan broadcast customer cardinality, an OOM
     # at real scale (caught ahead of the r11 registration).
-    from lakehouse_architecture_transaction_spark.plans import queued_r11 as Q
+    from lakehouse_architecture_transaction_spark.plans.window import _survival_curve_points
 
     # pin the LAZY curve plan (the registered fn checkpoints the
     # 13-row result, which would hide the join from explain)
-    plan = _formatted_plan(Q._survival_curve_points(spark, sf_dir))
+    plan = _formatted_plan(_survival_curve_points(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan
     assert re.search(r"Keys \[1\]: \[life_months#\d+", plan), (
         "the BNLJ build side must be the life_months histogram, "
@@ -335,13 +327,13 @@ def test_fd_profile_pruned_scans_no_row_joins(spark, sf_dir):
     # candidates scans ONLY its determinant+dependent columns and the
     # plan contains NO row-level join of any kind — a join (or an
     # unpruned scan) means the distinct-aggregate shape regressed.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans.etl import _FD_PAIRS
 
-    plan = _formatted_plan(Q.catalog_fd_profile(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["catalog_fd_profile"].fn(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert len(schemas) == len(Q._FD_PAIRS), f"expected 8 pruned scans, saw {len(schemas)}"
+    assert len(schemas) == len(_FD_PAIRS), f"expected 8 pruned scans, saw {len(schemas)}"
     widths = sorted(len(s.split(",")) for s in schemas)
-    want = sorted(len(det) + 1 for _, det, _ in Q._FD_PAIRS)
+    want = sorted(len(det) + 1 for _, det, _ in _FD_PAIRS)
     assert widths == want, f"scan widths {widths} != determinant+dependent {want}"
     for join in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
         assert join not in plan, f"FD profile must not plan a {join}"
@@ -350,11 +342,11 @@ def test_fd_profile_pruned_scans_no_row_joins(spark, sf_dir):
 def test_column_stats_pruned_scans_no_joins(spark, sf_dir):
     # ANALYZE-style stats: one single-column pruned scan per profiled
     # column, no joins anywhere — 17 scans of width 1.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans.etl import _STATS_COLS
 
-    plan = _formatted_plan(Q.catalog_column_stats(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["catalog_column_stats"].fn(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    n_cols = sum(len(cols) for _, cols in Q._STATS_COLS)
+    n_cols = sum(len(cols) for _, cols in _STATS_COLS)
     assert len(schemas) == n_cols, f"expected {n_cols} single-column scans, saw {len(schemas)}"
     multi = [s for s in schemas if "," in s]
     assert not multi, f"scans must read exactly one column, saw: {multi[:3]}"
@@ -368,9 +360,7 @@ def test_dsir_broadcasts_bucket_marginals_not_docs(spark, sf_dir):
     # and the doc metadata join are corpus-sized and must NEVER sit
     # under a BroadcastExchange (the doc-id join correctly plans as
     # sort-merge — both sides scale with the corpus).
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
-
-    plan = _formatted_plan(Q.docs_dsir_select(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["docs_dsir_select"].fn(spark, sf_dir))
     hits = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: (\[[^\n]*\])", plan)
     assert hits, "no BroadcastExchange matched — explain format drifted?"
     for inputs in hits:
@@ -385,11 +375,9 @@ def test_r14_shared_topk_frames_materialized_once(spark, sf_dir):
     # checkpoints must shield every downstream branch from re-scanning
     # the corpus (a ReadSchema in the result plan means a branch
     # replays the scan).
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
-
-    for fn in (Q.emb_matryoshka_recall, Q.docs_quality_calibration):
-        plan = _formatted_plan(fn(spark, sf_dir))
-        assert plan.count("ReadSchema") == 0, f"{fn.__name__} re-scans past its checkpoint"
+    for name in ("emb_matryoshka_recall", "docs_quality_calibration"):
+        plan = _formatted_plan(REGISTRY[name].fn(spark, sf_dir))
+        assert plan.count("ReadSchema") == 0, f"{name} re-scans past its checkpoint"
 
 
 def test_r13_dispersion_single_scan_no_rank_machinery(spark, sf_dir):
@@ -399,9 +387,7 @@ def test_r13_dispersion_single_scan_no_rank_machinery(spark, sf_dir):
     # re-reading the scan. A second ReadSchema or any join/window
     # means the grid-collapse shape regressed to row-cardinality
     # machinery.
-    from lakehouse_architecture_transaction_spark.plans import queued_r13 as Q
-
-    plan = _formatted_plan(Q.part_price_dispersion_by_type(spark, sf_dir))
+    plan = _formatted_plan(REGISTRY["part_price_dispersion_by_type"].fn(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert len(schemas) == 1, f"expected one part scan, saw {len(schemas)}"
     cols = sorted(c.split(":")[0] for c in schemas[0].split(","))

@@ -175,93 +175,11 @@ def test_laketable_degenerate_lifecycle(spark, tmp_path):
     assert t2.read().count() == 0
 
 
-def _queued_fns():
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r9 as Q9,
-        queued_r10 as Q10,
-        queued_r11 as Q11,
-        queued_r12 as Q12,
-        queued_r13 as Q13,
-        queued_r14 as Q14,
-    )
-
-    return [
-        # the r9 streaming companions (bounded availableNow runs: an
-        # EMPTY landing zone must drain to an empty frame, not crash).
-        # events_stream_{sessions,dedup,hourly,trending} and the rest
-        # of the r8 batch were REGISTERED in round 8 and now ride the
-        # registry-wide degenerate sweep above.
-        ("events_stream_clicks", Q9.events_stream_clicks),
-        ("events_stream_enriched", Q9.events_stream_enriched),
-        ("orders_stream_upsert_cdc", Q9.orders_stream_upsert_cdc),
-        # the r10 training ops (k > n path, window > text length path)
-        ("docs_priority_sample", Q10.docs_priority_sample),
-        ("docs_dup_spans", Q10.docs_dup_spans),
-        # the r10 diagnostics batch (empty pair frame, all-NULL keys,
-        # series shorter than the window/lag horizon, empty vocabulary)
-        ("docs_split_leakage", Q10.docs_split_leakage),
-        ("catalog_inclusion_profile", Q10.catalog_inclusion_profile),
-        ("events_seasonal_decompose", Q10.events_seasonal_decompose),
-        ("orders_revenue_autocorr", Q10.orders_revenue_autocorr),
-        ("docs_vocab_growth", Q10.docs_vocab_growth),
-        ("docs_source_distinctive_terms", Q10.docs_source_distinctive_terms),
-        # the house stateful sessionizer companion (empty landing
-        # zone: one empty schema-bearing slice, no sentinel file)
-        ("events_stream_sessions_stateful", Q10.events_stream_sessions_stateful),
-        # the r11 batch (no purchases, constant-x groups, empty corpus,
-        # single-vector embeddings, empty victim)
-        ("lineitem_shipdelay_trend", Q11.lineitem_shipdelay_trend),
-        ("customer_survival_curve", Q11.customer_survival_curve),
-        ("events_touch_attribution", Q11.events_touch_attribution),
-        ("docs_langid_confusion", Q11.docs_langid_confusion),
-        ("emb_pair_sim_histogram", Q11.emb_pair_sim_histogram),
-        ("orders_gdpr_erasure_audit", Q11.orders_gdpr_erasure_audit),
-        ("orders_benford_audit", Q11.orders_benford_audit),
-        ("docs_bpe_merges", Q11.docs_bpe_merges),
-        # the r12 batch (empty facts, all-null money, single-row dims)
-        ("orders_order_size_histogram", Q12.orders_order_size_histogram),
-        ("supplier_part_degree_profile", Q12.supplier_part_degree_profile),
-        ("customer_order_value_cv", Q12.customer_order_value_cv),
-        ("nation_trade_balance", Q12.nation_trade_balance),
-        # the r13 batch (all-null types, empty facts, one-user events)
-        ("part_price_dispersion_by_type", Q13.part_price_dispersion_by_type),
-        ("events_usertype_overlap", Q13.events_usertype_overlap),
-        ("lineitem_discount_profile", Q13.lineitem_discount_profile),
-        ("events_growth_accounting", Q13.events_growth_accounting),
-        ("events_hourly_concentration", Q13.events_hourly_concentration),
-        # the r14 batch (empty catalog tables, empty/one-doc corpus with
-        # zero-token texts, single-vector embeddings, all-null langs)
-        ("catalog_fd_profile", Q14.catalog_fd_profile),
-        ("catalog_column_stats", Q14.catalog_column_stats),
-        ("docs_dsir_select", Q14.docs_dsir_select),
-        ("emb_matryoshka_recall", Q14.emb_matryoshka_recall),
-        ("docs_quality_calibration", Q14.docs_quality_calibration),
-    ]
-
-
-@pytest.mark.parametrize("variant", ["empty", "one_row", "null_heavy", "dirty_values"])
-def test_queued_queries_survive_degenerate_inputs(spark, degenerate_dirs, variant):
-    # Queued (not-yet-registered) queries don't ride the registry
-    # sweeps above until registration — pre-pin them here so the
-    # future @register can't detonate the sweep.
-    failures = []
-    for name, fn in _queued_fns():
-        try:
-            fn(spark, degenerate_dirs[variant]).count()
-        except Exception as e:  # noqa: BLE001 — collecting the full list
-            failures.append(f"{name}: {type(e).__name__}: {str(e)[:120]}")
-        finally:
-            release_persisted()
-    assert not failures, f"queued queries crashed on {variant} input:\n" + "\n".join(failures)
-
-
 def test_fd_profile_empty_relation_gives_null_not_pass(spark, degenerate_dirs):
     # Vacuous truth guard (ADVICE r11): an EMPTY relation has zero
     # observations of the FD — the verdict must be NULL (no evidence),
     # never 1, so a catalog crawler cannot promote an unobserved FD.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
-
-    rows = Q.catalog_fd_profile(spark, degenerate_dirs["empty"]).collect()
+    rows = REGISTRY["catalog_fd_profile"].fn(spark, degenerate_dirs["empty"]).collect()
     assert rows, "profile must still emit one row per candidate"
     for r in rows:
         assert r["n_det"] == 0

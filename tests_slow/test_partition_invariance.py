@@ -91,48 +91,42 @@ def test_executor_count_invariance_smoke(spark, sf_dir):
     assert got == expected, f"{_SMOKE_QUERY}: output depends on executor-thread count"
 
 
-#: Queued (not-yet-registered) queries with real shuffles and NO
-#: session memo (a memoized frame would make the second run trivially
-#: identical): each call rebuilds its plan, so 16 vs 199 genuinely
-#: re-shuffles every stage.
-_QUEUED_SAMPLE = [
-    ("queued_r8", "nation_flow_matrix"),
-    ("queued_r8", "orders_backlog_daily"),
-    ("queued_r10", "catalog_inclusion_profile"),
-    ("queued_r10", "docs_source_distinctive_terms"),
-    ("queued_r11", "lineitem_shipdelay_trend"),
-    ("queued_r11", "events_touch_attribution"),
-    ("queued_r11", "customer_survival_curve"),
+#: Queries with real shuffles and NO session memo (a memoized frame
+#: would make the second run trivially identical): each call rebuilds
+#: its plan, so 16 vs 199 genuinely re-shuffles every stage.
+_SHUFFLE_SAMPLE = [
+    "nation_flow_matrix",
+    "orders_backlog_daily",
+    "catalog_inclusion_profile",
+    "docs_source_distinctive_terms",
+    "lineitem_shipdelay_trend",
+    "events_touch_attribution",
+    "customer_survival_curve",
     # the rest of the r11 registrations (r11: all eight now registered;
     # the gdpr audit is excluded — its LakeTable memo keys on
     # (applicationId, sf_dir), so the second run reads the same staged
     # table and the check would be vacuous)
-    ("queued_r11", "docs_langid_confusion"),
-    ("queued_r11", "emb_pair_sim_histogram"),
-    ("queued_r11", "orders_benford_audit"),
-    ("queued_r11", "docs_bpe_merges"),
+    "docs_langid_confusion",
+    "emb_pair_sim_histogram",
+    "orders_benford_audit",
+    "docs_bpe_merges",
     # the r14 batch (per-call localCheckpoints only — no module memo,
     # so the second run genuinely re-shuffles every stage)
-    ("queued_r14", "catalog_fd_profile"),
-    ("queued_r14", "catalog_column_stats"),
-    ("queued_r14", "docs_dsir_select"),
-    ("queued_r14", "emb_matryoshka_recall"),
-    ("queued_r14", "docs_quality_calibration"),
+    "catalog_fd_profile",
+    "catalog_column_stats",
+    "docs_dsir_select",
+    "emb_matryoshka_recall",
+    "docs_quality_calibration",
     # r13 bounded-state rewrite (grouped-top-k window + constant-5
     # collect): pins that the path result is independent of shuffle
     # width/partitioning
-    ("behavior", "events_top_paths"),
+    "events_top_paths",
 ]
 
 
-@pytest.mark.parametrize("mod_name,fn_name", _QUEUED_SAMPLE)
-def test_queued_shuffle_partition_invariance(spark, sf_dir, mod_name, fn_name):
-    import importlib
-
-    mod = importlib.import_module(
-        f"lakehouse_architecture_transaction_spark.plans.{mod_name}"
-    )
-    fn = getattr(mod, fn_name)
+@pytest.mark.parametrize("fn_name", _SHUFFLE_SAMPLE)
+def test_queued_shuffle_partition_invariance(spark, sf_dir, fn_name):
+    fn = REGISTRY[fn_name].fn
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "16")

@@ -147,18 +147,18 @@ NOTES = {
     ),
     "orders_market_basket": (
         "`Scan ExistingRDD` is the session-memoized co-purchase pair frame "
-        "(behavior.py `_copurchase_pairs`): the fact scan + distinct + "
+        "(_shared.py `_copurchase_pairs`): the fact scan + distinct + "
         "orderkey-co-partitioned self-join + pair aggregate run ONCE per "
         "session at checkpoint time and are shared with part_pagerank / "
         "part_copurchase_jaccard / part_copurchase_triangles."
     ),
     "part_copurchase_jaccard": (
         "Both `Scan ExistingRDD`s are shared session memos (distinct "
-        "(order, part) frame + weighted pair frame, behavior.py); the "
+        "(order, part) frame + weighted pair frame, _shared.py); the "
         "degree joins broadcast from the materialized frames."
     ),
     "part_copurchase_triangles": (
-        "Reads the shared pair-frame memo (behavior.py), orients edges by "
+        "Reads the shared pair-frame memo (_shared.py), orients edges by "
         "(degree, id), builds oriented out-adjacency lists, and closes "
         "triangles with a per-edge array_intersect — open wedges never "
         "reach a shuffle; adjacency arrays are capped at ~sqrt(m) by the "
@@ -180,7 +180,7 @@ NOTES = {
     ),
     "emb_ivf_cell_balance": (
         "`Scan ExistingRDD` is the session-memoized served IVF index "
-        "(pipeline_ops.py `_ivf_index` — the same clustered corpus the "
+        "(_shared.py `_ivf_index` — the same clustered corpus the "
         "search paths probe); the audit itself is one cell-cardinality "
         "aggregate + a broadcast 1-row total."
     ),
@@ -246,7 +246,7 @@ NOTES = {
     ),
     "docs_split_leakage": (
         "`Scan ExistingRDD` is the session-memoized LSH pair frame "
-        "(pipeline_ops.py `_minhash_pairs` — shared with L4/L17/L43/"
+        "(dedup.py `_cand_pairs_frame` — shared with L4/L17/L43/"
         "L59/L65/L67); the audit itself is the pair frame joined twice "
         "to the hash-split assignment (broadcast — split table is "
         "doc_id+class only) and one class-pair aggregate."

@@ -108,7 +108,7 @@ PROBES = [
     # super-linear stage — the degree-ordered orientation should show
     # as near-linear time/shuffle growth (hubs never fan out)
     "part_copurchase_triangles",
-    # r10-queue additions (queued, resolved via _fn fallback):
+    # r10-queue additions:
     # distinct-set full-outer joins ×8 edges (the FK-discovery shape —
     # shuffles at DISTINCT cardinality, which grows with the shifted
     # key spaces), and the pair-frame × split-frame classification
@@ -155,7 +155,7 @@ PROBES = [
     # k × partition count, independent of corpus growth.
     "docs_priority_sample",
     # queued-queue risk shapes probed ahead of their registration
-    # rounds (resolved via the _fn fallback):
+    # rounds:
     # - docs_dup_spans (r10): the documented ~window× position
     #   amplification — posexplode to per-position 50-char keys, ONE
     #   shuffle at position cardinality; shuffle should scale linearly
@@ -243,28 +243,6 @@ PROBES = [
     "mm_features",
     "mm_frame_features",
 ]
-
-
-def _fn(name: str):
-    """Resolve a probe name: registered query, else a queued plan fn."""
-    if name in REGISTRY:
-        return REGISTRY[name].fn
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r8,
-        queued_r9,
-        queued_r10,
-        queued_r11,
-        queued_r12,
-        queued_r13,
-        queued_r14,
-    )
-
-    for mod in (
-        queued_r14, queued_r13, queued_r12, queued_r11, queued_r10, queued_r9, queued_r8
-    ):
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise KeyError(name)
 
 
 def build_scaled(spark, factor: int) -> str:
@@ -400,7 +378,7 @@ def main() -> None:
                 # nothing). The noop sink executes the FULL plan, all
                 # columns, and discards rows executor-side — no driver
                 # transfer to distort big-output shapes.
-                force_full_result(_fn(name)(spark, dirs[f_]))
+                force_full_result(REGISTRY[name].fn(spark, dirs[f_]))
                 times.append(time.perf_counter() - t0)
                 release_persisted()
             # 3 identical runs → per-run shuffle volume = delta / 3

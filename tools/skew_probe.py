@@ -145,23 +145,6 @@ PROBES = [
 ]
 
 
-def _fn(name: str):
-    """Resolve a probe name: registered query, else a queued plan fn."""
-    if name in REGISTRY:
-        return REGISTRY[name].fn
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r8,
-        queued_r9,
-        queued_r10,
-        queued_r11,
-    )
-
-    for mod in (queued_r11, queued_r10, queued_r9, queued_r8):
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise KeyError(name)
-
-
 def build(spark, variant: str) -> str:
     out_dir = os.path.join(OUT, variant)
     marker = os.path.join(out_dir, "_DONE")
@@ -238,7 +221,7 @@ def text_main(spark) -> None:
             s0 = shuffle_write_bytes(spark)
             for _ in range(3):
                 t0 = time.perf_counter()
-                force_full_result(_fn(name)(spark, d))
+                force_full_result(REGISTRY[name].fn(spark, d))
                 best = min(best, time.perf_counter() - t0)
                 release_persisted()
             s1 = shuffle_write_bytes(spark)
@@ -297,7 +280,7 @@ def main() -> None:
             s0 = shuffle_write_bytes(spark)
             for _ in range(3):
                 t0 = time.perf_counter()
-                force_full_result(_fn(name)(spark, d))
+                force_full_result(REGISTRY[name].fn(spark, d))
                 best = min(best, time.perf_counter() - t0)
                 release_persisted()
             s1 = shuffle_write_bytes(spark)
